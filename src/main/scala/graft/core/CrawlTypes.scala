@@ -1,67 +1,9 @@
 package graft.core
 
-import java.sql.{Date, Timestamp}
-
-/** Core record types of the crawl engine (SURVEY.md §1).
-  * All are plain case classes so `import spark.implicits._` derives
-  * Catalyst encoders; columnar layout, no Kryo.
+/** Configuration records of the crawl engine (SURVEY.md §1). The row
+  * schemas themselves are the `StructType`s of
+  * [[graft.streaming.CrawlEngine]].
   */
-
-/** A Common-Crawl-style page — the fetch universe (BASELINE.json
-  * input_hint): the reference's network GET becomes an equi-join of the
-  * scheduled frontier against this table (network.py:201-313 →
-  * frontier ⋈ pages on url).
-  */
-final case class PageRow(
-    url: String,
-    warc_ts: Timestamp,
-    html: Array[Byte],
-    text: String,
-    lang: String)
-
-/** One frontier (pending) URL — the reference's `pending_urls` SQLite
-  * table (session_hist.py:114-115) plus the scheduling metadata the north
-  * rule demands (host-hash partitioning, priority, deterministic seq).
-  */
-final case class FrontierRow(
-    url: String,
-    source: String,
-    host: String,
-    hostHash: Int,
-    priority: Int,
-    waveDiscovered: Long,
-    seq: Long,
-    attempts: Int,
-    /** BFS depth from the wave-0 seeds (seeds = 0, their links = 1, …);
-      * gates link expansion per URL against maxFrontierDepth.
-      */
-    depth: Int)
-
-/** One seen URL — union of the reference's URL_LIST / FAILED_URLS /
-  * HTTP_ERRORS tables (session_hist.py:112-131) with a status
-  * discriminator.
-  */
-final case class SeenRow(
-    url: String,
-    source: String,
-    status: String, // completed | failed | http_error
-    httpCode: Int,
-    pubdate: Date,
-    rawsize: Long,
-    datasize: Long)
-
-/** Extracted article record (news_event.py:58-246 → SURVEY.md §1.1). */
-final case class Article(
-    url: String,
-    uniqueId: String,
-    module: String,
-    pubdate: Date,
-    title: String,
-    text: String,
-    keywords: Seq[String],
-    sourceName: Seq[String],
-    industries: Seq[String],
-    category: String)
 
 /** Per-source crawl configuration — the reference's plugin class
   * attributes (base_plugin.py:93-194 → SURVEY.md §1.5).
@@ -182,15 +124,3 @@ final case class SchedulerConfig(
       * without it.
       */
     carryBudgetDebt: Boolean = false)
-
-/** Per-partition counters committed with each snapshot (north rule:
-  * "per-partition fetch counters"; reference analog A5,
-  * base_plugin.py:335-352).
-  */
-final case class WaveCounters(
-    waveId: Long,
-    partitionId: Int,
-    scheduled: Long,
-    deduped: Long,
-    fetched: Long,
-    failed: Long)

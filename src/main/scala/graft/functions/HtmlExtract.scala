@@ -269,12 +269,7 @@ object HtmlExtract {
   /** Column API: body text of the first matching block. */
   def block_text(html: Column, tag: String, selector: String): Column =
     ColumnBridge.column(BlockTextExpr(
-      ColumnBridge.expression(html), tag, selector, paragraphsOnly = false))
-
-  /** Column API: concatenated direct <p> text of the first match. */
-  def block_paragraph_text(html: Column, tag: String, selector: String): Column =
-    ColumnBridge.column(BlockTextExpr(
-      ColumnBridge.expression(html), tag, selector, paragraphsOnly = true))
+      ColumnBridge.expression(html), tag, selector))
 
   /** GENERIC fallback body extraction — the Spark analog of the
     * reference's newspaper-library text path (base_plugin.py:1253-1260:
@@ -356,20 +351,14 @@ object HtmlExtract {
   * SURROUNDING projection in one whole-stage span instead of splitting
   * it at every CodegenFallback boundary (VERDICT r04 item 8).
   */
-case class BlockTextExpr(child: Expression, tag: String, selector: String,
-                         paragraphsOnly: Boolean)
+case class BlockTextExpr(child: Expression, tag: String, selector: String)
     extends UnaryExpression {
 
   override def dataType: DataType = StringType
   override def nullable: Boolean = child.nullable
 
-  def compute(input: UTF8String): UTF8String = {
-    val html = input.toString
-    val out =
-      if (paragraphsOnly) HtmlExtract.blockParagraphText(html, tag, selector)
-      else HtmlExtract.blockText(html, tag, selector)
-    UTF8String.fromString(out)
-  }
+  def compute(input: UTF8String): UTF8String =
+    UTF8String.fromString(HtmlExtract.blockText(input.toString, tag, selector))
 
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[UTF8String])

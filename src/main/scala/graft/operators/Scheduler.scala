@@ -99,11 +99,14 @@ object Scheduler {
       .drop("_disallow")
   }
 
-  /** Two-phase per-host top-K under the politeness budget.
-    * Phase 1 bounds every (host, salt) bucket to the host budget cap so
-    * no single window task ever sees more than bucket-local rows of a hot
-    * host; phase 2 applies the exact per-host limit and yields the final
-    * (priority, seq) crawl order.
+  /** Two-phase per-host top-K under the politeness budget — the
+    * engine's only top-K path. Phase 1 bounds every (host, salt) bucket
+    * to the host budget cap so no single window task ever sees more than
+    * bucket-local rows of a hot host; phase 2 applies the exact per-host
+    * limit and yields the final (priority, seq) crawl order. Windows, not
+    * a typed `mapGroups`, because Catalyst can push the rank limit into
+    * the shuffle (WindowGroupLimit); CrawlWaveSpec checks the result
+    * against a typed bounded-heap `flatMapGroups` reference.
     */
   def topKPerHost(frontier: DataFrame, waveId: Long,
                   cfg: SchedulerConfig,
@@ -135,61 +138,6 @@ object Scheduler {
       .filter(col("_rn") <= budget)
       .withColumn("scheduleRank", col("_rn").cast("int"))
       .drop("_rn", "_carrySecs")
-  }
-
-  /** Typed per-host budget enforcement (north rule: "per-host politeness
-    * budgets ... enforced via mapGroups over host keys"): group by host
-    * key, emit the budgeted top-K in (priority, seq) order with a bounded
-    * heap — O(rows · log K) per group, never materializing a hot host's
-    * full row list. Semantically identical to [[topKPerHost]] (asserted
-    * in CrawlWaveSpec); the window form is the default because Catalyst
-    * can push its rank limit into the shuffle (WindowGroupLimit), but the
-    * typed form is the natural home for richer stateful admission logic
-    * (e.g. carrying per-host crawl-delay debt across waves).
-    */
-  def topKPerHostTyped(frontier: DataFrame, waveId: Long,
-                       cfg: SchedulerConfig,
-                       carry: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.Row
-    val base = carry match {
-      case Some(cdf) => frontier
-        .join(cdf.select(col("host"), col("carrySecs").as("_carrySecs")),
-          Seq("host"), "left")
-        .withColumn("_carrySecs", coalesce(col("_carrySecs"), lit(0L)))
-      case None => frontier.withColumn("_carrySecs", lit(0L))
-    }
-    val withBudget = base.withColumn("_budget",
-      hostBudgetWithCarry(col("host"), col("_carrySecs"), waveId, cfg))
-      .drop("_carrySecs")
-    val schema = withBudget.schema
-    val out = org.apache.spark.sql.types.StructType(
-      schema.filterNot(_.name == "_budget") :+
-        org.apache.spark.sql.types.StructField("scheduleRank",
-          org.apache.spark.sql.types.IntegerType))
-    val pIdx = schema.fieldIndex("priority")
-    val sIdx = schema.fieldIndex("seq")
-    val bIdx = schema.fieldIndex("_budget")
-    implicit val rowEnc = org.apache.spark.sql.Encoders.row(out)
-    val ord = Ordering.by[Row, (Int, Long)](r =>
-      (r.getInt(pIdx), r.getLong(sIdx)))
-    withBudget
-      .groupByKey(r => r.getString(schema.fieldIndex("host")))(
-        org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroups { (_: String, rows: Iterator[Row]) =>
-        var budget = -1
-        // bounded max-heap of the K smallest (priority, seq) rows
-        val heap = new scala.collection.mutable.PriorityQueue[Row]()(ord)
-        rows.foreach { r =>
-          if (budget < 0) budget = r.getInt(bIdx)
-          if (budget > 0) {
-            if (heap.size < budget) heap.enqueue(r)
-            else if (ord.lt(r, heap.head)) { heap.dequeue(); heap.enqueue(r) }
-          }
-        }
-        val kept: Seq[Row] = heap.dequeueAll[Row].reverse
-        Iterator.tabulate(kept.size)(i =>
-          Row.fromSeq(kept(i).toSeq.patch(bIdx, Nil, 1) :+ (i + 1)))
-      }
   }
 
   /** Full wave scheduling: first-seen URL dedupe (P14) → seen-set

@@ -217,6 +217,45 @@ class CrawlWaveSpec extends SparkTestBase {
     assert(laterMisses > 0, "wave-1 filter unexpectedly covers later waves")
   }
 
+  /** Reference per-host budget enforcement in the north rule's typed
+    * form ("enforced via mapGroups over host keys"): group by host and
+    * keep the budgeted top-K in (priority, seq) order with a bounded
+    * heap. [[graft.operators.Scheduler.topKPerHost]] must agree with it.
+    */
+  private def typedTopKPerHost(frontier: DataFrame, waveId: Long,
+                               c: SchedulerConfig): DataFrame = {
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val withBudget = frontier.withColumn("_budget",
+      graft.operators.Scheduler.hostBudget(col("host"), waveId, c))
+    val schema = withBudget.schema
+    val out = StructType(schema.filterNot(_.name == "_budget") :+
+      StructField("scheduleRank", IntegerType))
+    val hIdx = schema.fieldIndex("host")
+    val pIdx = schema.fieldIndex("priority")
+    val sIdx = schema.fieldIndex("seq")
+    val bIdx = schema.fieldIndex("_budget")
+    val ord = Ordering.by[Row, (Int, Long)](r =>
+      (r.getInt(pIdx), r.getLong(sIdx)))
+    withBudget
+      .groupByKey(_.getString(hIdx))(Encoders.STRING)
+      .flatMapGroups { (_: String, rows: Iterator[Row]) =>
+        var budget = -1
+        // bounded max-heap of the K smallest (priority, seq) rows
+        val heap = new scala.collection.mutable.PriorityQueue[Row]()(ord)
+        rows.foreach { r =>
+          if (budget < 0) budget = r.getInt(bIdx)
+          if (budget > 0) {
+            if (heap.size < budget) heap.enqueue(r)
+            else if (ord.lt(r, heap.head)) { heap.dequeue(); heap.enqueue(r) }
+          }
+        }
+        val kept = heap.dequeueAll[Row].reverse
+        Iterator.tabulate(kept.size)(i =>
+          Row.fromSeq(kept(i).toSeq.patch(bIdx, Nil, 1) :+ (i + 1)))
+      }(Encoders.row(out))
+  }
+
   test("typed mapGroups budget enforcement equals the window top-K") {
     import spark.implicits._
     import graft.operators.Scheduler
@@ -237,27 +276,20 @@ class CrawlWaveSpec extends SparkTestBase {
     def key(df: org.apache.spark.sql.DataFrame) = df
       .select("url", "scheduleRank").as[(String, Int)].collect().toSet
     val win = key(Scheduler.topKPerHost(frontier, 3L, c))
-    val typed = key(Scheduler.topKPerHostTyped(frontier, 3L, c))
+    val typed = key(typedTopKPerHost(frontier, 3L, c))
     assert(win.nonEmpty && win == typed)
   }
 
   test("wave extraction dispatches the per-source cascade (fixture parity)") {
-    import java.io.{BufferedInputStream, FileInputStream}
-    import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
     import spark.implicits._
-    def fixture(name: String): Array[Byte] = {
-      val in = new BZip2CompressorInputStream(new BufferedInputStream(
-        new FileInputStream(s"/root/reference/test-data/$name")))
-      try in.readAllBytes() finally in.close()
-    }
     // the reference's own fixture pages, routed by source through the wave
     val rows = Seq(
       ("https://www.eco.com/markets/a-73837853", "ecotimes",
-        fixture("mod_en_in_ecotimes_73837853.html.bz2"), 2914L),
+        Fixtures.bz2("mod_en_in_ecotimes_73837853.html.bz2"), 2914L),
       ("https://www.toi.com/biz/a-1210", "timesofindia",
-        fixture("mod_en_in_timesofindia_0xa2097d6c.html.bz2"), 1210L),
+        Fixtures.bz2("mod_en_in_timesofindia_0xa2097d6c.html.bz2"), 1210L),
       ("https://www.kanoon.org/doc/49865912", "indiakanoon",
-        fixture("mod_en_in_indiakanoon_49865912.html.bz2"), 12287L))
+        Fixtures.bz2("mod_en_in_indiakanoon_49865912.html.bz2"), 12287L))
     val pages = rows.map { case (u, _, h, _) => (u, h) }.toDF("url", "html")
     val seeds = rows.map { case (u, s, _, _) => (u, s) }.zipWithIndex
       .map { case ((u, s), i) => (u, s, 0, i.toLong) }
@@ -276,19 +308,12 @@ class CrawlWaveSpec extends SparkTestBase {
 
   test("ecotimes fixture end-to-end through the ENGINE pins the reference " +
       "assertions (test_mod_en_in_ecotimes.py:124-144)") {
-    import java.io.{BufferedInputStream, FileInputStream}
-    import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
     import spark.implicits._
-    def fixture(name: String): Array[Byte] = {
-      val in = new BZip2CompressorInputStream(new BufferedInputStream(
-        new FileInputStream(s"/root/reference/test-data/$name")))
-      try in.readAllBytes() finally in.close()
-    }
     // the reference test's exact URL and fixture page
     val url = "https://economictimes.indiatimes.com/markets/expert-view/" +
       "a-reasonable-budget-but-still-unclear-on-fiscal-deficit-front-" +
       "swaminathan-aiyar/articleshow/73837853.cms"
-    val pages = Seq((url, fixture("mod_en_in_ecotimes_73837853.html.bz2")))
+    val pages = Seq((url, Fixtures.bz2("mod_en_in_ecotimes_73837853.html.bz2")))
       .toDF("url", "html")
     val seeds = Seq((url, "ecotimes", 0, 1L))
       .toDF("url", "source", "priority", "seq")
@@ -314,14 +339,7 @@ class CrawlWaveSpec extends SparkTestBase {
 
   test("timesofindia + indiakanoon fixtures end-to-end through the ENGINE " +
       "(test_mod_en_in_timesofindia.py:114-142, test_mod_en_in_indiakanoon.py:110-135)") {
-    import java.io.{BufferedInputStream, FileInputStream}
-    import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
     import spark.implicits._
-    def fixture(name: String): Array[Byte] = {
-      val in = new BZip2CompressorInputStream(new BufferedInputStream(
-        new FileInputStream(s"/root/reference/test-data/$name")))
-      try in.readAllBytes() finally in.close()
-    }
     val toiUrl = "https://timesofindia.indiatimes.com/blogs/toi-edit-page/" +
       "as-communal-riots-exploded-in-delhi-elected-representatives-were-" +
       "missing-on-the-ground-when-residents-needed-them-most/"
@@ -329,9 +347,9 @@ class CrawlWaveSpec extends SparkTestBase {
     val ndtvUrl = "https://www.ndtv.com/business/dollar-rises-on-us-" +
       "recovery-hopes-bitcoin-hits-near-record-52-640-2373245"
     val pages = Seq(
-      (toiUrl, fixture("mod_en_in_timesofindia_0xa2097d6c.html.bz2")),
-      (kanoonUrl, fixture("mod_en_in_indiakanoon_49865912.html.bz2")),
-      (ndtvUrl, fixture("mod_en_in_ndtv_2373245.html.bz2")))
+      (toiUrl, Fixtures.bz2("mod_en_in_timesofindia_0xa2097d6c.html.bz2")),
+      (kanoonUrl, Fixtures.bz2("mod_en_in_indiakanoon_49865912.html.bz2")),
+      (ndtvUrl, Fixtures.bz2("mod_en_in_ndtv_2373245.html.bz2")))
       .toDF("url", "html")
     val seeds = Seq((toiUrl, "timesofindia", 0, 1L),
       (kanoonUrl, "indiakanoon", 0, 2L), (ndtvUrl, "ndtv", 0, 3L))
@@ -646,14 +664,7 @@ class CrawlWaveSpec extends SparkTestBase {
       "(id/pubdate/authors per the reference tests; the config-shell " +
       "cascades extract 0 chars on these pages — the reference asserts " +
       "that too — so the text gate is lowered to let those commit)") {
-    import java.io.{BufferedInputStream, FileInputStream}
-    import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
     import spark.implicits._
-    def fixture(name: String): Array[Byte] = {
-      val in = new BZip2CompressorInputStream(new BufferedInputStream(
-        new FileInputStream(s"/root/reference/test-data/$name")))
-      try in.readAllBytes() finally in.close()
-    }
     // (source, fixture, reference-test URL, id, pubdate, authors,
     //  minTextSize) — fixture pages served for the test URLs exactly
     // like the reference's mocked fetch
@@ -685,7 +696,7 @@ class CrawlWaveSpec extends SparkTestBase {
           "biden-demands-military-cede-power-orders-sanctions-review-" +
           "2258178.html",
         "2258178", "2020-12-20", "", -1L)) // -1 = textSize > 5000 below
-    val pages = cases.map(c => (c._3.toLowerCase, fixture(c._2)))
+    val pages = cases.map(c => (c._3.toLowerCase, Fixtures.bz2(c._2)))
       .toDF("url", "html")
     val seeds = cases.zipWithIndex
       .map { case (c, i) => (c._3, c._1, 0, (i + 1).toLong) }
@@ -713,13 +724,8 @@ class CrawlWaveSpec extends SparkTestBase {
   test("generic body fallback (newspaper-library analog): livemint page " +
       "yields '' with the flag off (fixture parity) and real article " +
       "text with it on") {
-    import java.io.{BufferedInputStream, FileInputStream}
-    import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
     import spark.implicits._
-    val in = new BZip2CompressorInputStream(new BufferedInputStream(
-      new FileInputStream("/root/reference/test-data/" +
-        "mod_en_in_livemint_11613646112891.html.bz2")))
-    val html = try in.readAllBytes() finally in.close()
+    val html = Fixtures.bz2("mod_en_in_livemint_11613646112891.html.bz2")
     val url = "https://www.livemint.com/money/personal-finance/term-" +
       "insurance-policy-premium-likely-to-get-costlier-11613646112891.html"
     val pages = Seq((url.toLowerCase, html)).toDF("url", "html")

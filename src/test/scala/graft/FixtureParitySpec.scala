@@ -1,15 +1,11 @@
 package graft
 
-import java.io.{BufferedInputStream, FileInputStream}
-import java.nio.charset.StandardCharsets
-
-import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.HtmlExtract
 
 /** Byte-identical extraction parity against the reference fixture corpus
-  * (bz2 HTML pages under /root/reference/test-data) — the pinned assertions from
+  * (bz2 HTML pages, see [[Fixtures]]) — the pinned assertions from
   * the reference's own tests are the oracle (SURVEY.md §5):
   *   - ecotimes 73837853: len(extractArticleBody(html)) == 2914
   *     (test_mod_en_in_ecotimes.py:139-144)
@@ -21,17 +17,8 @@ import graft.functions.HtmlExtract
   */
 class FixtureParitySpec extends AnyFunSuite {
 
-  private val fixtureDir = "/root/reference/test-data"
-
-  private def fixture(name: String): String = {
-    val in = new BZip2CompressorInputStream(
-      new BufferedInputStream(new FileInputStream(s"$fixtureDir/$name")))
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
   test("ecotimes 73837853: artText block text is exactly 2914 chars") {
-    val html = fixture("mod_en_in_ecotimes_73837853.html.bz2")
+    val html = Fixtures.bz2Text("mod_en_in_ecotimes_73837853.html.bz2")
     // the reference cascade resolves to format5 (div.artText) on this page
     val body = HtmlExtract.blockText(html, "div", "artText")
     assert(body.length == 2914, s"got ${body.length}")
@@ -39,7 +26,7 @@ class FixtureParitySpec extends AnyFunSuite {
   }
 
   test("ecotimes cascade earlier formats do not match the fixture") {
-    val html = fixture("mod_en_in_ecotimes_73837853.html.bz2")
+    val html = Fixtures.bz2Text("mod_en_in_ecotimes_73837853.html.bz2")
     assert(HtmlExtract.blockText(html, "div", "article-body") == "")
     assert(HtmlExtract.blockText(html, "article", "artData clr paywall") == "")
     assert(HtmlExtract.blockText(html, "div", "blog-show") == "")
@@ -49,14 +36,14 @@ class FixtureParitySpec extends AnyFunSuite {
   }
 
   test("timesofindia: p-children walk is exactly 1210 chars") {
-    val html = fixture("mod_en_in_timesofindia_0xa2097d6c.html.bz2")
+    val html = Fixtures.bz2Text("mod_en_in_timesofindia_0xa2097d6c.html.bz2")
     val body = HtmlExtract.paragraphTextUntilTag(
       html, "div", "main-content single-article-content")
     assert(body.length == 1210, s"got ${body.length}")
   }
 
   test("ndtv: class-list paragraph extraction exceeds 6000 chars") {
-    val html = fixture("mod_en_in_ndtv_2373245.html.bz2")
+    val html = Fixtures.bz2Text("mod_en_in_ndtv_2373245.html.bz2")
     val body = HtmlExtract.textOnlyParagraphs(html,
       Seq("ins_storybody", "content_text row description",
         "fullstoryCtrl_fulldetails")) +
@@ -66,13 +53,13 @@ class FixtureParitySpec extends AnyFunSuite {
   }
 
   test("inexp_business: articlestorycontent extraction exceeds 5000 chars") {
-    val html = fixture("mod_en_in_inexp_business_2238510.html.bz2")
+    val html = Fixtures.bz2Text("mod_en_in_inexp_business_2238510.html.bz2")
     val body = HtmlExtract.allBlocksText(html, "div", "articlestorycontent")
     assert(body.length > 5000, s"got ${body.length}")
   }
 
   test("indiakanoon 49865912: parent walk is exactly 12287 chars") {
-    val html = fixture("mod_en_in_indiakanoon_49865912.html.bz2")
+    val html = Fixtures.bz2Text("mod_en_in_indiakanoon_49865912.html.bz2")
     val body = graft.extract.SourceCascades.indiakanoon(html)
     assert(body.length == 12287, s"got ${body.length}")
     assert(body.contains("Premium Member"))
@@ -81,26 +68,26 @@ class FixtureParitySpec extends AnyFunSuite {
   test("per-source cascade registry reproduces each pinned length") {
     import graft.extract.SourceCascades.registry
     assert(registry("ecotimes")(
-      fixture("mod_en_in_ecotimes_73837853.html.bz2")).length == 2914)
+      Fixtures.bz2Text("mod_en_in_ecotimes_73837853.html.bz2")).length == 2914)
     assert(registry("timesofindia")(
-      fixture("mod_en_in_timesofindia_0xa2097d6c.html.bz2")).length == 1210)
+      Fixtures.bz2Text("mod_en_in_timesofindia_0xa2097d6c.html.bz2")).length == 1210)
     assert(registry("indiakanoon")(
-      fixture("mod_en_in_indiakanoon_49865912.html.bz2")).length == 12287)
+      Fixtures.bz2Text("mod_en_in_indiakanoon_49865912.html.bz2")).length == 12287)
     assert(registry("ndtv")(
-      fixture("mod_en_in_ndtv_2373245.html.bz2")).length > 6000)
+      Fixtures.bz2Text("mod_en_in_ndtv_2373245.html.bz2")).length > 6000)
     assert(registry("inexp_business")(
-      fixture("mod_en_in_inexp_business_2238510.html.bz2")).length > 5000)
+      Fixtures.bz2Text("mod_en_in_inexp_business_2238510.html.bz2")).length > 5000)
   }
 
   test("non-matching fixtures extract empty (reference pins len==0)") {
     val cases = Seq(
       ("mod_en_in_hindu_30713792.html.bz2",
         () => HtmlExtract.allBlocksText(
-          fixture("mod_en_in_hindu_30713792.html.bz2"), "div",
+          Fixtures.bz2Text("mod_en_in_hindu_30713792.html.bz2"), "div",
           "articlestorycontent")),
       ("mod_en_in_forbes_69073.html.bz2",
         () => HtmlExtract.allBlocksText(
-          fixture("mod_en_in_forbes_69073.html.bz2"), "div",
+          Fixtures.bz2Text("mod_en_in_forbes_69073.html.bz2"), "div",
           "articlestorycontent")))
     cases.foreach { case (name, f) =>
       assert(f().isEmpty, s"$name should extract empty")

@@ -33,7 +33,7 @@ class GdeltFixtureSpec extends SparkTestBase {
       "(test_mod_in_gdelt.py:126-140)") {
     // extract the zip's single .txt member to a temp dir
     val zf = new java.util.zip.ZipFile(
-      "/root/reference/test-data/mod_in_gdelt_20210203.zip")
+      Fixtures.file("mod_in_gdelt_20210203.zip"))
     val entry = {
       val es = zf.entries()
       var found: java.util.zip.ZipEntry = null

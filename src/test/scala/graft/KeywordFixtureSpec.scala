@@ -18,7 +18,7 @@ class KeywordFixtureSpec extends AnyFunSuite {
 
   private def sentences: Seq[String] = {
     val lines = scala.io.Source.fromFile(
-      "/root/reference/test-data/flag_keywords_test_sentences.txt")
+      Fixtures.file("flag_keywords_test_sentences.txt"))
     // drop the header, dividers, and the few '|'-bearing lines — those
     // are raw keyword-list fragments, not test sentences
     try lines.getLines().toList.map(_.trim).filter(l =>

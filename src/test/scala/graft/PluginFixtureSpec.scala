@@ -1,9 +1,5 @@
 package graft
 
-import java.io.{BufferedInputStream, FileInputStream}
-import java.nio.charset.StandardCharsets
-
-import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
 import org.apache.spark.sql.functions._
 
 import graft.extract.{SourceCascades, SourceProfiles}
@@ -33,15 +29,6 @@ import graft.functions.DateExtract
   */
 class PluginFixtureSpec extends SparkTestBase {
 
-  private val fixtureDir = "/root/reference/test-data"
-
-  private def fixture(name: String): String = {
-    val in = new BZip2CompressorInputStream(
-      new BufferedInputStream(new FileInputStream(s"$fixtureDir/$name")))
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
   /** (source, fixture, test URL, expected id, expected pubdate,
     * expected authors joined with '|')
     */
@@ -68,7 +55,7 @@ class PluginFixtureSpec extends SparkTestBase {
   test("six plugin profiles pin id/pubdate/authors on reference fixtures") {
     import spark.implicits._
     val rows = pins.map { case (src, fix, url, _, _, _) =>
-      (src, url, fixture(fix))
+      (src, url, Fixtures.bz2Text(fix))
     }.toDF("source", "url", "html")
     val out = rows.select(col("source"),
         SourceProfiles.bySource(col("source"))(p =>
@@ -96,7 +83,7 @@ class PluginFixtureSpec extends SparkTestBase {
       "(h1[itemprop=headline], mod_en_in_ndtv.py:286-299); other sources " +
       "fall back to the <title> tag") {
     import spark.implicits._
-    val ndtvHtml = fixture("mod_en_in_ndtv_2373245.html.bz2")
+    val ndtvHtml = Fixtures.bz2Text("mod_en_in_ndtv_2373245.html.bz2")
     val rows = Seq(("ndtv", ndtvHtml),
       ("livemint", "<html><head><title>Generic Headline</title></head>" +
         "<body><h1 itemprop=\"headline\">not for this source</h1></body></html>"),
@@ -170,16 +157,16 @@ class PluginFixtureSpec extends SparkTestBase {
   test("forbes/inexp/hindu/moneycontrol/livemint/business_std cascade " +
       "fixture parity (reference pins: inexp>5000, others==0)") {
     assert(SourceCascades.registry("hindu")(
-      fixture("mod_en_in_hindu_30713792.html.bz2")).isEmpty)
+      Fixtures.bz2Text("mod_en_in_hindu_30713792.html.bz2")).isEmpty)
     assert(SourceCascades.registry("moneycontrol")(
-      fixture("mod_en_in_moneycontrol_6541471.html.bz2")).isEmpty)
+      Fixtures.bz2Text("mod_en_in_moneycontrol_6541471.html.bz2")).isEmpty)
     assert(SourceCascades.registry("livemint")(
-      fixture("mod_en_in_livemint_11613646112891.html.bz2")).isEmpty)
+      Fixtures.bz2Text("mod_en_in_livemint_11613646112891.html.bz2")).isEmpty)
     assert(SourceCascades.registry("business_std")(
-      fixture("mod_en_in_business_std_119011800410.html.bz2")).isEmpty)
+      Fixtures.bz2Text("mod_en_in_business_std_119011800410.html.bz2")).isEmpty)
     assert(SourceCascades.registry("forbes")(
-      fixture("mod_en_in_forbes_69073.html.bz2")).isEmpty)
+      Fixtures.bz2Text("mod_en_in_forbes_69073.html.bz2")).isEmpty)
     assert(SourceCascades.registry("inexp_business")(
-      fixture("mod_en_in_inexp_business_2238510.html.bz2")).length > 5000)
+      Fixtures.bz2Text("mod_en_in_inexp_business_2238510.html.bz2")).length > 5000)
   }
 }

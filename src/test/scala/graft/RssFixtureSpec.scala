@@ -13,8 +13,6 @@ import org.apache.spark.sql.functions._
 class RssFixtureSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val fixtureDir = "/root/reference/test-data"
-
   private val pins = Seq(
     ("mod_en_in_business_std_rss.xml", 30,
       "https://www.business-standard.com/article/economy-policy/no-resumption-of-da-dr-from-july-1-for-central-govt-employees-finmin-121062601192_1.html"),
@@ -39,7 +37,7 @@ class RssFixtureSpec extends SparkTestBase {
 
   private def xml(name: String): String =
     new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$fixtureDir/$name")),
+      Fixtures.file(name).toPath),
       java.nio.charset.StandardCharsets.UTF_8)
 
   test("rssLinks reproduces the per-item link sets of all ten " +

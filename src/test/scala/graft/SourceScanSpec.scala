@@ -2,7 +2,7 @@ package graft
 
 import java.io.{BufferedInputStream, FileInputStream}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.util.zip.ZipInputStream
 
 import org.apache.spark.sql.functions._
@@ -14,8 +14,6 @@ import org.apache.spark.sql.functions._
   */
 class SourceScanSpec extends SparkTestBase {
   import spark.implicits._
-
-  private val td = "/root/reference/test-data"
 
   test("S8 gdelt url preparation: date-2 with yyyyMMdd (pinned)") {
     // reference pins (test_mod_in_gdelt.py): run date → url date
@@ -37,7 +35,7 @@ class SourceScanSpec extends SparkTestBase {
     // unzip the fixture TSV to a temp dir (the reference unzips then
     // reads; Spark reads the extracted TSV)
     val zin = new ZipInputStream(new BufferedInputStream(
-      new FileInputStream(s"$td/mod_in_gdelt_20210203.zip")))
+      new FileInputStream(Fixtures.file("mod_in_gdelt_20210203.zip"))))
     val entry = zin.getNextEntry
     assert(entry != null)
     val tmp = Files.createTempDirectory("gdelt")
@@ -57,8 +55,7 @@ class SourceScanSpec extends SparkTestBase {
   }
 
   test("S1 rss item-link scan over the nine reference feed fixtures") {
-    val feeds = new java.io.File(td).listFiles()
-      .filter(_.getName.endsWith("_rss.xml")).sortBy(_.getName)
+    val feeds = Fixtures.filesEndingWith("_rss.xml")
     assert(feeds.length >= 9)
     feeds.foreach { f =>
       val xml = Files.readString(f.toPath, StandardCharsets.UTF_8)
@@ -75,7 +72,7 @@ class SourceScanSpec extends SparkTestBase {
 
   test("P13 article JSON round-trip on the reference record") {
     val json = Files.readString(
-      Paths.get(s"$td/test_readFromJSON.json"), StandardCharsets.UTF_8)
+      Fixtures.file("test_readFromJSON.json").toPath, StandardCharsets.UTF_8)
     val df = spark.read.json(Seq(json).toDS())
     val row = df.select("pubdate", "uniqueID", "module").collect().head
     assert(row.getString(0) == "2019-12-23")
