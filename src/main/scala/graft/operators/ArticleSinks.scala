@@ -20,13 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, StringType, StructField}
 object ArticleSinks {
 
   /** Deduped, text-free CSV projection (column order preserved). */
-  def csvRows(articles: DataFrame): DataFrame = {
-    val others = articles.columns.filterNot(_ == "url").toSeq
-    articles
-      .groupBy("url").agg(min(struct(others.map(col): _*)).as("_r"))
-      .select(col("url") +: others.map(c => col(s"_r.$c").as(c)): _*)
-      .drop("text", "html")
-  }
+  def csvRows(articles: DataFrame): DataFrame =
+    Survivor.first(articles, Seq("url"), Seq()).drop("text", "html")
 
   /** CSV-writable frame: non-atomic columns flattened (string arrays →
     * '|'-joined, anything else → JSON).

@@ -106,7 +106,7 @@ object DedupeArticles {
         col("n").as("nb")).hint("shuffle_hash"), Seq("url_b", "w"))
       .groupBy("url_a", "url_b").agg(sum(col("na") * col("nb")).as("dot"))
 
-    candidates.join(dots, Seq("url_a", "url_b"))
+    val pairs = candidates.join(dots, Seq("url_a", "url_b"))
       .join(norms.select(col("url").as("url_a"), col("sq").as("sqa")), "url_a")
       .join(norms.select(col("url").as("url_b"), col("sq").as("sqb")), "url_b")
       .withColumn("cos", col("dot") /
@@ -125,10 +125,7 @@ object DedupeArticles {
           (col("size_a") === col("size_b") && col("id_a") > col("id_b")),
           col("url_b")).otherwise(col("url_a")).as("keptUrl"),
         round(col("cos"), 6).as("cos"))
-      .groupBy("url")
-      .agg(min(struct(col("keptUrl"), col("cos"), col("pubdate"))).as("_k"))
-      .select(col("_k.pubdate").as("pubdate"), col("url"),
-        col("_k.keptUrl").as("keptUrl"), col("_k.cos").as("cos"))
+    Survivor.first(pairs, Seq("url"), Seq("keptUrl", "cos", "pubdate"))
   }
 
   /** Articles minus the tombstoned victims. */

@@ -37,21 +37,12 @@ object Scheduler {
       pmod(xxhash64(host, lit(waveId)), lit(span.toLong)).cast("int")
   }
 
-  /** Per-host fetch budget for this wave. */
-  def hostBudget(host: Column, waveId: Long, cfg: SchedulerConfig): Column =
-    least(
-      lit(cfg.topKPerHost),
-      floor(lit(cfg.waveSeconds).cast("double") /
-        politenessWaitSecs(host, waveId, cfg).cast("double")).cast("int"))
-
-  /** Per-host budget with carried crawl-delay debt
-    * ([[SchedulerConfig.carryBudgetDebt]]): the continuous-politeness
-    * form — unused seconds from earlier waves extend this wave's
-    * usable window. `carrySecs` must be a bound LONG column (joined
-    * from the carry state table, 0 for unknown hosts).
+  /** Per-host fetch budget for this wave. `carrySecs` is the carried
+    * crawl-delay debt ([[SchedulerConfig.carryBudgetDebt]]): unused
+    * seconds from earlier waves extend this wave's usable window.
     */
-  def hostBudgetWithCarry(host: Column, carrySecs: Column, waveId: Long,
-                          cfg: SchedulerConfig): Column =
+  def hostBudget(host: Column, waveId: Long, cfg: SchedulerConfig,
+                 carrySecs: Column = lit(0L)): Column =
     least(
       lit(cfg.topKPerHost),
       floor((lit(cfg.waveSeconds).cast("double") +
@@ -99,32 +90,20 @@ object Scheduler {
       .drop("_disallow")
   }
 
-  /** Two-phase per-host top-K under the politeness budget — the
-    * engine's only top-K path. Phase 1 bounds every (host, salt) bucket
-    * to the host budget cap so no single window task ever sees more than
-    * bucket-local rows of a hot host; phase 2 applies the exact per-host
-    * limit and yields the final (priority, seq) crawl order. Windows, not
-    * a typed `mapGroups`, because Catalyst can push the rank limit into
-    * the shuffle (WindowGroupLimit); CrawlWaveSpec checks the result
+  /** Two-phase per-host top-K under the per-host `budget` (an INT
+    * column over the frontier's columns) — the engine's only top-K path.
+    * Phase 1 bounds every (host, salt) bucket to the budget so no single
+    * window task ever sees more than bucket-local rows of a hot host;
+    * phase 2 applies the exact per-host limit and yields the final
+    * (priority, seq) crawl order as `scheduleRank`. Windows, not a typed
+    * `mapGroups`, because Catalyst can push the rank limit into the
+    * shuffle (WindowGroupLimit); CrawlWaveSpec checks the result
     * against a typed bounded-heap `flatMapGroups` reference.
     */
-  def topKPerHost(frontier: DataFrame, waveId: Long,
-                  cfg: SchedulerConfig,
-                  carry: Option[DataFrame] = None): DataFrame = {
-    // with carry state, the budget reads a per-host joined column; the
-    // carry relation is O(|active hosts|) ≪ O(|frontier|), so AQE picks
-    // a broadcast join at realistic sizes
-    val base = carry match {
-      case Some(cdf) => frontier
-        .join(cdf.select(col("host"), col("carrySecs").as("_carrySecs")),
-          Seq("host"), "left")
-        .withColumn("_carrySecs", coalesce(col("_carrySecs"), lit(0L)))
-      case None => frontier.withColumn("_carrySecs", lit(0L))
-    }
-    val budget =
-      hostBudgetWithCarry(col("host"), col("_carrySecs"), waveId, cfg)
-    val salted = base.withColumn("_salt",
-      pmod(xxhash64(col("url")), lit(cfg.saltBuckets.toLong)).cast("int"))
+  def topKPerHost(frontier: DataFrame, budget: Column,
+                  saltBuckets: Int): DataFrame = {
+    val salted = frontier.withColumn("_salt",
+      pmod(xxhash64(col("url")), lit(saltBuckets.toLong)).cast("int"))
     val w1 = Window.partitionBy(col("host"), col("_salt"))
       .orderBy(col("priority"), col("seq"))
     val phase1 = salted
@@ -137,7 +116,7 @@ object Scheduler {
       .withColumn("_rn", row_number().over(w2))
       .filter(col("_rn") <= budget)
       .withColumn("scheduleRank", col("_rn").cast("int"))
-      .drop("_rn", "_carrySecs")
+      .drop("_rn")
   }
 
   /** Full wave scheduling: first-seen URL dedupe (P14) → seen-set
@@ -152,20 +131,21 @@ object Scheduler {
     // first-seen dedupe cannot change which duplicate survives, and it
     // shrinks every later stage.
     val unseen = SeenSet.removeSeen(frontier, "url", seen, "url", blooms)
-    // P14 first-seen dedupe as a HASH AGGREGATION (map-side combinable —
-    // no global sort): min(struct(priority, seq, ...)) is the
-    // lexicographic minimum, i.e. the earliest (priority, seq) row.
-    val others = frontier.columns.filterNot(_ == "url").toSeq
-    val packed = struct((Seq("priority", "seq") ++
-      others.filterNot(c => c == "priority" || c == "seq"))
-      .map(col): _*)
-    val deduped = unseen
-      .groupBy(col("url")).agg(min(packed).as("_first"))
-      .select(col("url") +: others.map(c => col(s"_first.$c").as(c)): _*)
+    val deduped = Survivor.first(unseen, Seq("url"), Seq("priority", "seq"))
     val gated = robotsGate(deduped, robots)
+    // with carry state, the budget reads a per-host joined column; the
+    // carry relation is O(|active hosts|) ≪ O(|frontier|), so AQE picks
+    // a broadcast join at realistic sizes
+    val (budgeted, carrySecs) = carry match {
+      case Some(cdf) =>
+        (gated.join(cdf.select(col("host"), col("carrySecs").as("_carrySecs")),
+          Seq("host"), "left"), coalesce(col("_carrySecs"), lit(0L)))
+      case None => (gated, lit(0L))
+    }
     // NOTE: no trailing repartition — the scheduled set is small (≤ K per
     // host); downstream stages (fetch join on url, frontier commit by
     // hostHash) pick their own partitioning.
-    topKPerHost(gated, waveId, cfg, carry)
+    topKPerHost(budgeted, hostBudget(col("host"), waveId, cfg, carrySecs),
+      cfg.saltBuckets).drop("_carrySecs")
   }
 }

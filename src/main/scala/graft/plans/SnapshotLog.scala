@@ -2,10 +2,8 @@ package graft.plans
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
-import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -103,17 +101,23 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   def history: Seq[Commit] =
     commitFiles().map(p => parse(Files.readString(p, StandardCharsets.UTF_8)))
 
-  /** Read the table at the latest snapshot (empty DataFrame with the
-    * given schema when no snapshot or no live dirs exist).
+  /** The parquet data of commit `c` read with `schema`, or with the
+    * schema merged across its data dirs when `mergeSchema`; an empty
+    * `schema` frame when there is no commit or it has no live dirs.
     */
-  def read(schema: StructType): DataFrame =
-    latest.filter(_.dirs.nonEmpty) match {
-      case Some(c) =>
-        spark.read.schema(schema).parquet(c.dirs.map(d => s"$root/data/$d"): _*)
+  private def load(c: Option[Commit], schema: StructType,
+                   mergeSchema: Boolean = false): DataFrame =
+    c.filter(_.dirs.nonEmpty).map(_.dirs.map(d => s"$root/data/$d")) match {
+      case Some(paths) =>
+        (if (mergeSchema) spark.read.option("mergeSchema", "true")
+         else spark.read.schema(schema)).parquet(paths: _*)
       case None =>
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
+
+  /** Read the table at the latest snapshot. */
+  def read(schema: StructType): DataFrame = load(latest, schema)
 
   /** Read the table at the latest snapshot with its FULL on-disk schema
     * (merged across data dirs) — for whole-table rewrites that must not
@@ -122,37 +126,13 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * an empty `fallback`-schema frame when no snapshot exists.
     */
   def readFull(fallback: StructType): DataFrame =
-    latest.filter(_.dirs.nonEmpty) match {
-      case Some(c) =>
-        spark.read.option("mergeSchema", "true")
-          .parquet(c.dirs.map(d => s"$root/data/$d"): _*)
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fallback)
-    }
-
-  /** Read as of a specific snapshot id (time travel / lineage). */
-  def readAt(schema: StructType, snapshotId: Long): DataFrame = {
-    val c = history.find(_.snapshotId == snapshotId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no snapshot $snapshotId under $root"))
-    if (c.dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(c.dirs.map(d => s"$root/data/$d"): _*)
-  }
+    load(latest, fallback, mergeSchema = true)
 
   /** Read the table as of the LAST commit with waveId <= `wave` (resume
     * path: a crashed wave re-reads its parent snapshots).
     */
   def readAtWave(schema: StructType, wave: Long): DataFrame =
-    history.filter(_.waveId <= wave).lastOption match {
-      case Some(c) if c.dirs.nonEmpty =>
-        spark.read.schema(schema).parquet(c.dirs.map(d => s"$root/data/$d"): _*)
-      case _ =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    load(history.filter(_.waveId <= wave).lastOption, schema)
 
   // -- commits ---------------------------------------------------------------
 
@@ -190,21 +170,5 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     val dir = writeData(df, sid)
     writeCommit(Commit(sid, parent.map(_.snapshotId).getOrElse(0L), waveId,
       Seq(dir), counters))
-  }
-
-  /** Drop data dirs not referenced by any manifest (crash leftovers). */
-  def vacuumOrphans(): Seq[String] = {
-    val live = history.flatMap(_.dirs).toSet
-    if (!Files.isDirectory(dataDir)) return Seq()
-    val stream = Files.list(dataDir)
-    val orphans =
-      try stream.iterator().asScala
-        .filter(p => !live.contains(p.getFileName.toString)).toSeq
-      finally stream.close()
-    orphans.foreach { p =>
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(f => Try(Files.delete(f)))
-    }
-    orphans.map(_.getFileName.toString)
   }
 }

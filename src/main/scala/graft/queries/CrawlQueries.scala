@@ -1,21 +1,34 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.SchedulerConfig
 import graft.functions.{TextClean, UrlFunctions => U}
+import graft.operators.{Scheduler, SeenSet, Survivor}
 import Tables._
 
 /** Crawl-engine operator queries (SURVEY.md §2.1–§2.8) exposed through
   * SparkEntry for the driver's DuckDB correctness gate. Each runs the real
   * library operator over the deterministic synthetic URL universe
   * ([[Tables.urls]]); the oracle reproduces the *semantics* in ANSI SQL.
+  * The frontier rules run the engine's own operators:
+  *  - q_seen_antijoin → [[SeenSet.removeSeen]] (no bloom);
+  *  - q_frontier_topk, q_host_budget → [[Scheduler.topKPerHost]];
+  *  - q_first_seen_dedupe → [[Survivor.first]];
+  *  - q_robots_gate → [[Scheduler.robotsGate]];
+  *  - q_wave_schedule → [[Scheduler.schedule]] (J1 → P14 → robots →
+  *    budgeted top-K) after the F1/F2 filter.
   */
 object CrawlQueries {
 
   private val wl = Seq("/articles/", "/news/", "/markets/")
   private val bl = Seq("utm_", "/photos/")
+  private val saltBuckets = SchedulerConfig().saltBuckets
+
+  /** The synthetic host number: www.news<n>.com → n. */
+  private val hostNum: Column =
+    regexp_extract(col("host"), "news([0-9]+)", 1).cast("int")
 
   /** q_url_normalize — P1 lower + P2 host + path (scraper_utils.py:477,388). */
   private def urlNormalize(s: SparkSession, dir: String): DataFrame = {
@@ -55,7 +68,7 @@ object CrawlQueries {
     * (session_hist.py:349-422): candidates LEFT ANTI seen.
     */
   private def seenAntijoin(s: SparkSession, dir: String): DataFrame =
-    urls(s, dir).join(seenUrls(s, dir), Seq("url"), "left_anti")
+    SeenSet.removeSeen(urls(s, dir), "url", seenUrls(s, dir), "url")
       .select("doc_id", "url").orderBy("doc_id")
 
   private val seenAntijoinSql = withUrlsSeen(
@@ -110,14 +123,10 @@ object CrawlQueries {
   /** q_frontier_topk — W3 per-host top-K (K=3) by (priority, seq):
     * the scheduler's dequeue window (SURVEY.md §2.7).
     */
-  private def frontierTopk(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("host"))
-      .orderBy(col("priority"), col("seq"))
-    urls(s, dir).withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("host"), col("url"), col("rn").cast("int").as("rn"))
+  private def frontierTopk(s: SparkSession, dir: String): DataFrame =
+    Scheduler.topKPerHost(urls(s, dir), lit(3), saltBuckets)
+      .select(col("host"), col("url"), col("scheduleRank").as("rn"))
       .orderBy("host", "rn")
-  }
 
   private val frontierTopkSql = withUrls(
     """SELECT host, url, CAST(rn AS INT) AS rn FROM (
@@ -131,10 +140,10 @@ object CrawlQueries {
     * share each dup_key (doc_id%100); the first (min seq) survives.
     */
   private def firstSeenDedupe(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("dup_key")).orderBy(col("seq"))
-    urls(s, dir).withColumn("dup_key", (col("doc_id") % 100).cast("int"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val keyed = urls(s, dir)
+      .select((col("doc_id") % 100).cast("int").as("dup_key"), col("seq"),
+        col("doc_id"))
+    Survivor.first(keyed, Seq("dup_key"), Seq("seq"))
       .select(col("dup_key"), col("doc_id").as("first_doc"))
       .orderBy("dup_key")
   }
@@ -151,7 +160,6 @@ object CrawlQueries {
     */
   private def domainRoute(s: SparkSession, dir: String): DataFrame = {
     val u = urls(s, dir)
-    val hostNum = regexp_extract(col("host"), "news([0-9]+)", 1).cast("int")
     val dim = u.select(col("host")).distinct()
       .withColumn("route",
         concat(lit("plugin"), (hostNum % 5).cast("string")))
@@ -223,12 +231,8 @@ object CrawlQueries {
     * first `budget` urls per host by (priority, seq).
     */
   private def hostBudget(s: SparkSession, dir: String): DataFrame = {
-    val u = urls(s, dir)
-    val hostNum = regexp_extract(col("host"), "news([0-9]+)", 1).cast("int")
-    val w = Window.partitionBy(col("host")).orderBy(col("priority"), col("seq"))
-    u.withColumn("budget", (lit(2) + hostNum % 3).cast("int"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= col("budget"))
+    val u = urls(s, dir).withColumn("budget", (lit(2) + hostNum % 3).cast("int"))
+    Scheduler.topKPerHost(u, col("budget"), saltBuckets)
       .select(col("host"), col("budget"), col("url"))
       .orderBy("host", "url")
   }
@@ -261,24 +265,19 @@ object CrawlQueries {
       |WHERE doc_id % 10 <> 0
       |ORDER BY doc_id""".stripMargin)
 
+  /** robots(host, disallowPrefixes): hosts with hostnum%4=0 disallow the
+    * '/articles/' path prefix.
+    */
+  private def robots(u: DataFrame): DataFrame =
+    u.select(col("host")).distinct().filter(hostNum % 4 === 0)
+      .select(col("host"), array(lit("/articles/")).as("disallowPrefixes"))
+
   /** q_robots_gate — north-rule robots.txt gating: hosts with
-    * hostnum%4=0 disallow the '/articles/' prefix; anti prefix-join.
+    * hostnum%4=0 disallow the '/articles/' prefix.
     */
   private def robotsGate(s: SparkSession, dir: String): DataFrame = {
     val u = urls(s, dir)
-    val hostNum = regexp_extract(col("host"), "news([0-9]+)", 1).cast("int")
-    // the dim derives from u, so RENAME its columns: a same-name equality
-    // across a self-derived join is fragile (Spark's "trivially true
-    // equals predicate" warning) even when attribute ids disambiguate
-    val robots = u.select(col("host")).distinct()
-      .filter(hostNum % 4 === 0)
-      .select(col("host").as("r_host"),
-        concat(lit("https://"), col("host"), lit("/articles/"))
-          .as("disallow_prefix"))
-    u.join(broadcast(robots),
-        col("host") === col("r_host") &&
-          col("url").startsWith(col("disallow_prefix")),
-        "left_anti")
+    Scheduler.robotsGate(u, robots(u))
       .select("doc_id", "url").orderBy("doc_id")
   }
 
@@ -294,22 +293,11 @@ object CrawlQueries {
     */
   private def waveSchedule(s: SparkSession, dir: String): DataFrame = {
     val u = urls(s, dir)
-    val hostNum = regexp_extract(col("host"), "news([0-9]+)", 1).cast("int")
     val filtered = u
       .filter(U.retainValid(col("url"), wl) && U.notInvalid(col("url"), bl))
-      .join(seenUrls(s, dir), Seq("url"), "left_anti")
-    // renamed dim columns — see robotsGate for why
-    val robots = u.select(col("host")).distinct().filter(hostNum % 4 === 0)
-      .select(col("host").as("r_host"),
-        concat(lit("https://"), col("host"), lit("/articles/"))
-          .as("disallow_prefix"))
-    val gated = filtered.join(broadcast(robots),
-      col("host") === col("r_host") &&
-        col("url").startsWith(col("disallow_prefix")),
-      "left_anti")
-    val w = Window.partitionBy(col("host")).orderBy(col("priority"), col("seq"))
-    gated.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
+    // the default one-hour wave gives every host a budget of at least 3
+    Scheduler.schedule(filtered, seenUrls(s, dir), robots(u), 1L,
+        SchedulerConfig(topKPerHost = 3))
       .select(col("host"), col("priority"), col("seq"), col("url"))
       .orderBy("priority", "seq")
   }

@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.core.SchedulerConfig
 import graft.functions.{TextClean, UrlFunctions => U}
-import graft.operators.{Scheduler, SeenSet}
+import graft.operators.{Scheduler, SeenSet, Survivor}
 import graft.plans.{BloomStore, SnapshotTable}
 
 /** One crawl wave = one driver-orchestrated micro-batch (SURVEY.md §2.9,
@@ -289,11 +289,7 @@ final class CrawlEngine(val spark: SparkSession, val root: String,
       .filter(col("_sn") <= cfg.maxLinksPerSave)
       .drop("_sn")
     // first-seen dedupe within the wave (P14): smallest seq wins
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("url")).orderBy(col("seq"))
-    val deduped = capped
-      .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-      .drop("_rn")
+    val deduped = Survivor.first(capped, Seq("url"), Seq("seq"))
     // drop anything already seen or already in the frontier (the frontier
     // is append-only and scheduled rows came from it, so seen ∪ frontier
     // covers pending + scheduled + completed)
@@ -526,18 +522,25 @@ final class CrawlEngine(val spark: SparkSession, val root: String,
     frontierT.read(frontierSchema)
       .join(seenT.read(seenSchema).select("url"), Seq("url"), "left_anti")
   /** The full logical §1.1 article record, html payload included:
-    * base table + the url-keyed sidecar. The sidecar side is
-    * defensively first-row-deduped on url before the join (url
-    * uniqueness IS an invariant — the seen-table dedupe guarantees a
-    * url is fetched once — but a violated invariant here would silently
-    * duplicate article rows rather than fail, so the read enforces it).
-    * Readers that do not need the payload should use
-    * [[articlesBaseNow]] and skip the join entirely.
+    * base table + the url-keyed sidecar ([[htmlByUrl]]). Readers that
+    * do not need the payload should use [[articlesBaseNow]] and skip
+    * the join entirely.
     */
   def articlesNow(): DataFrame =
     articlesT.read(articleBaseSchema)
-      .join(htmlT.read(htmlSchema).dropDuplicates("url"), Seq("url"), "left")
+      .join(htmlByUrl(), Seq("url"), "left")
       .select(articleSchema.fieldNames.toSeq.map(col): _*)
+
+  /** The html sidecar, one payload per url. Url uniqueness IS an
+    * invariant (the seen-table dedupe fetches a url once), but a
+    * crash-retry could leave two payloads for one url; a violated
+    * invariant must neither duplicate article rows nor pick a payload
+    * arbitrarily, so every reader keeps the max payload — a total order
+    * over the bytes, stable run-to-run (normally the duplicates are
+    * byte-identical and the max IS the payload).
+    */
+  private def htmlByUrl(): DataFrame =
+    htmlT.read(htmlSchema).groupBy("url").agg(max("html").as("html"))
 
   /** The base article record without the html payload — no sidecar
     * join in the plan.
@@ -561,13 +564,7 @@ final class CrawlEngine(val spark: SparkSession, val root: String,
     */
   def compactHtmlSidecar(): Long = {
     val live = articlesT.read(articleBaseSchema).select("url")
-    // deterministic survivor per url (ADVICE r06): dropDuplicates keeps
-    // an arbitrary row if a crash-retry ever left two payloads for one
-    // url; max over the binary payload is a total order, so compaction
-    // output is stable run-to-run (normal case: duplicates are
-    // byte-identical and the max IS the payload)
-    val kept = htmlT.read(htmlSchema)
-      .groupBy("url").agg(max("html").as("html"))
+    val kept = htmlByUrl()
       .join(live, Seq("url"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.operators.Survivor
+
 /** Continuous crawling as a real Structured Streaming job (north star:
   * "each crawl wave is a Structured-Streaming-style micro-batch"): a
   * stream of seed URLs drives the engine via `foreachBatch` — every
@@ -27,12 +29,12 @@ object StreamingCrawl {
     val frontier = engine.frontierT.read(engine.frontierSchema)
     val seen = engine.seenT.read(engine.seenSchema)
     val known = frontier.select("url").unionByName(seen.select("url"))
-    val fresh = seeds
-      .select(
-        F.lower(F.col("url")).as("url"), F.col("source"),
-        F.col("priority").cast("int").as("priority"),
-        F.col("seq").cast("long").as("seq"))
-      .dropDuplicates("url")
+    // seeds that lowercase to one url keep the first (priority, seq) row
+    val normalized = seeds.select(
+      F.lower(F.col("url")).as("url"), F.col("source"),
+      F.col("priority").cast("int").as("priority"),
+      F.col("seq").cast("long").as("seq"))
+    val fresh = Survivor.first(normalized, Seq("url"), Seq("priority", "seq"))
       .join(known, Seq("url"), "left_anti")
     if (!fresh.isEmpty) {
       val rows = fresh.select(

@@ -275,7 +275,8 @@ class CrawlWaveSpec extends SparkTestBase {
       lit(0).as("depth"))
     def key(df: org.apache.spark.sql.DataFrame) = df
       .select("url", "scheduleRank").as[(String, Int)].collect().toSet
-    val win = key(Scheduler.topKPerHost(frontier, 3L, c))
+    val win = key(Scheduler.topKPerHost(frontier,
+      Scheduler.hostBudget(col("host"), 3L, c), c.saltBuckets))
     val typed = key(typedTopKPerHost(frontier, 3L, c))
     assert(win.nonEmpty && win == typed)
   }
@@ -550,6 +551,37 @@ class CrawlWaveSpec extends SparkTestBase {
     assert(s3.fetched > 0)
     assert(e.htmlT.read(e.htmlSchema).count() == sidecarRows + s3.fetched,
       "post-compaction waves must keep committing payloads")
+  }
+
+  test("one html survivor: articlesNow and compactHtmlSidecar keep the " +
+      "max payload of a url with two") {
+    import spark.implicits._
+    val e = newEngine()
+    e.runWave()
+    val Array(u1, u2) = e.articlesBaseNow().select("url").as[String]
+      .collect().sorted.take(2)
+    def payload(df: DataFrame, url: String): Seq[Seq[Byte]] =
+      df.filter(col("url") === url).select("html").as[Array[Byte]]
+        .collect().map(_.toSeq).toSeq
+    val Seq(h1) = payload(e.htmlT.read(e.htmlSchema), u1)
+    val Seq(h2) = payload(e.htmlT.read(e.htmlSchema), u2)
+    // a crash-retry's second, different payload: larger than the first
+    // for u1, smaller for u2, so neither first- nor last-written wins
+    e.htmlT.commitAppend(Seq((u1, (h1 :+ 'x'.toByte).toArray),
+        (u2, h2.dropRight(1).toArray)).toDF("url", "html"),
+      e.lastCompleteWave)
+    val expected = Map(u1 -> (h1 :+ 'x'.toByte), u2 -> h2)
+    // the candidates differ in length, so a wrong pick shows as its size
+    def check(df: => DataFrame): Unit = Seq(u1, u2).foreach { u =>
+      val got = payload(df, u)
+      val kept = got == Seq(expected(u))
+      assert(kept,
+        s"$u kept ${got.map(_.length)} bytes, want ${expected(u).length}")
+    }
+    check(e.articlesNow())
+    e.compactHtmlSidecar()
+    check(e.htmlT.read(e.htmlSchema))
+    check(e.articlesNow())
   }
 
   test("post-process chain enriches articles in W1 order") {

@@ -5,7 +5,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 
 import graft.functions.{TextClean, UrlFunctions => U}
-import graft.operators.SeenSet
+import graft.operators.{SeenSet, Survivor}
 
 /** Property-based semantics checks (SURVEY.md §5): the Spark column
   * expressions are compared against direct Scala models of the
@@ -119,20 +119,20 @@ class PropertySpec extends SparkTestBase {
 
   test("property: first-seen dedupe picks the minimal (priority, seq) row") {
     import spark.implicits._
-    // model of P14 as used in Scheduler.schedule: lexicographic min
+    // model of P14 as used in Scheduler.schedule: lexicographic min of
+    // (priority, seq), ties broken on the remaining column
     val rowGen = for {
-      u <- Gen.choose(0, 40); p <- Gen.choose(0, 3); s <- Gen.choose(0L, 1e6.toLong)
-    } yield (s"https://h/$u", p, s)
+      u <- Gen.choose(0, 40); p <- Gen.choose(0, 3); s <- Gen.choose(0L, 20L)
+      src <- Gen.oneOf("a", "b", "c")
+    } yield (s"https://h/$u", src, p, s)
     val rows = samples(rowGen, 600).distinct
     val model = rows.groupBy(_._1).view
-      .mapValues(_.minBy(r => (r._2, r._3))).toMap
-    val df = rows.toDF("url", "priority", "seq")
-    val got = df.groupBy(col("url"))
-      .agg(min(struct(col("priority"), col("seq"))).as("f"))
-      .select(col("url"), col("f.priority"), col("f.seq"))
-      .as[(String, Int, Long)].collect()
+      .mapValues(_.minBy(r => (r._3, r._4, r._2))).toMap
+    val df = rows.toDF("url", "source", "priority", "seq")
+    val got = Survivor.first(df, Seq("url"), Seq("priority", "seq"))
+      .as[(String, String, Int, Long)].collect()
     assert(got.length == model.size)
-    got.foreach { case (u, p, s) => assert(model(u) == ((u, p, s))) }
+    got.foreach(r => assert(model(r._1) == r))
   }
 
   test("property: politeness budget is within the clamp for any host") {

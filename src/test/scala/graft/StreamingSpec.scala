@@ -104,6 +104,29 @@ class StreamingSpec extends SparkTestBase {
     assert(s.articlesNow().count() > 0 && mismatch == 0)
   }
 
+  test("streamed seeds that lowercase to one url keep the min " +
+      "(priority, seq) row") {
+    import graft.core.SchedulerConfig
+    import graft.sources.SyntheticPages
+    import graft.streaming.{CrawlEngine, StreamingCrawl}
+    val robots = Seq.empty[(String, Seq[String])].toDF("host", "disallowPrefixes")
+    val e = new CrawlEngine(spark, tempDir("stream-case"),
+      SyntheticPages.pages(spark, 10), robots,
+      SchedulerConfig(numPartitions = 2, saltBuckets = 2, bloomShards = 2))
+    e.init(SyntheticPages.seeds(spark, 1).limit(0))
+    // one partition, the upper-case spelling (larger seq) first: a
+    // keep-the-first-row dedupe would keep it
+    val seeds = Seq(
+      ("HTTP://WWW.CASE.COM/A", "upper", 0, 20L),
+      ("http://www.case.com/a", "lower", 0, 10L))
+      .toDF("url", "source", "priority", "seq").coalesce(1)
+    StreamingCrawl.processBatch(e, seeds)
+    val kept = e.frontierT.read(e.frontierSchema)
+      .filter(col("url") === "http://www.case.com/a")
+      .select("source", "seq").as[(String, Long)].collect()
+    assert(kept.toSeq == Seq(("lower", 10L)))
+  }
+
   test("watermarked append-mode windowed agg finalizes windows on " +
       "watermark advance and drops too-late rows (§2.9)") {
     val stage = tempDir("wm-events")
