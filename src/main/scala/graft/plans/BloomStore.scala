@@ -3,8 +3,6 @@ package graft.plans
 import java.io.{DataInputStream, DataOutputStream}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import scala.jdk.CollectionConverters._
-
 /** Persisted sharded-bloom snapshots, one binary file per wave, written
   * next to the snapshot tables (SURVEY.md §4 item 2: the URL-seen filter
   * shards checkpoint with snapshot lineage, north rule "URL-seen filter
@@ -13,9 +11,12 @@ import scala.jdk.CollectionConverters._
   * Layout: `<root>/<waveId padded>.bloom`, format
   * `[int shards][per shard: int len, bytes]`, written to a temp file and
   * atomically renamed — same crash discipline as [[SnapshotTable]]: a
-  * partial write is never visible, and a missing wave file degrades to
-  * the previous wave's filter (the bloom only PRUNES; the exact anti-join
-  * decides, so a stale filter is correct, just slightly less selective).
+  * partial write is never visible. A filter is only valid for its own
+  * wave: an earlier wave's file misses every url seen since, and
+  * [[graft.operators.SeenSet.removeSeen]] passes bloom misses on WITHOUT
+  * the exact anti-join, so a stale filter would re-schedule seen urls.
+  * A missing wave file therefore reads as absent, and the engine
+  * rebuilds the filter from the seen snapshot instead.
   *
   * Scale: per wave the engine ORs in a bloom built over that wave's new
   * seen urls only — O(wave delta + bloom bits) — instead of rebuilding
@@ -29,23 +30,9 @@ final class BloomStore(root: String) {
 
   private def fileFor(waveId: Long): Path = dir.resolve(f"$waveId%012d.bloom")
 
-  /** Committed wave files only: `<digits>.bloom`. A crash between
-    * createTempFile and the atomic move can leave a `.tmp-*.bloom`
-    * orphan; accepting it here would make every later readAtWave throw
-    * on `.toLong`, so the name filter IS the crash discipline.
-    */
-  private def waveFiles(): Seq[(Long, Path)] = {
-    val stream = Files.list(dir)
-    try stream.iterator().asScala
-      .filter(_.getFileName.toString.matches("\\d+\\.bloom"))
-      .map(p => p.getFileName.toString.stripSuffix(".bloom").toLong -> p)
-      .toSeq.sortBy(_._1)
-    finally stream.close()
-  }
-
-  /** Latest persisted shards with waveId <= `wave`, if any. */
+  /** The shards persisted for exactly `wave`, if that file exists. */
   def readAtWave(wave: Long): Option[Array[Array[Byte]]] =
-    waveFiles().filter(_._1 <= wave).lastOption.map { case (_, p) =>
+    Some(fileFor(wave)).filter(Files.isRegularFile(_)).map { p =>
       val in = new DataInputStream(Files.newInputStream(p))
       try {
         val shards = in.readInt()

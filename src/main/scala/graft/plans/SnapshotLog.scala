@@ -150,9 +150,12 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     dir
   }
 
-  /** Append `df` as a new snapshot (parent's dirs + the new dir). */
+  /** Append `df` as a new snapshot (parent's dirs + the new dir).
+    * `counters` is evaluated after the data is written, so a caller may
+    * pass counters that another job is still computing.
+    */
   def commitAppend(df: DataFrame, waveId: Long,
-                   counters: Map[String, Long] = Map()): Commit = {
+                   counters: => Map[String, Long] = Map()): Commit = {
     val parent = latest
     val sid = parent.map(_.snapshotId).getOrElse(0L) + 1
     val dir = writeData(df, sid)
@@ -162,9 +165,11 @@ final class SnapshotTable(spark: SparkSession, root: String) {
 
   /** Replace table contents with `df` (frontier rewrite per wave — the
     * reference's pending-table DELETE+INSERT, session_hist.py:149-164).
+    * `counters` is evaluated after the data is written, as in
+    * [[commitAppend]].
     */
   def commitReplace(df: DataFrame, waveId: Long,
-                    counters: Map[String, Long] = Map()): Commit = {
+                    counters: => Map[String, Long] = Map()): Commit = {
     val parent = latest
     val sid = parent.map(_.snapshotId).getOrElse(0L) + 1
     val dir = writeData(df, sid)

@@ -1,5 +1,9 @@
 package graft.streaming
 
+import scala.concurrent.{Await, Future, Promise}
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,11 +20,11 @@ import graft.plans.{BloomStore, SnapshotTable}
   * network.py:201-313) → extract articles (§2.4/§3.3) → discover links
   * (S5→F6→J1) → commit frontier/seen/articles snapshots with counters.
   *
-  * Crash/resume: the three tables commit sequentially; a wave is
-  * re-runnable because every stage is a deterministic function of the
-  * PARENT snapshots, and per-table wave ids make re-commits idempotent
-  * (a table already at this waveId skips). The engine resumes from
-  * `min(latest waveId per table)` — exactly the north rule's
+  * Crash/resume: the tables commit concurrently, in no fixed order; a
+  * wave is re-runnable because every stage is a deterministic function
+  * of the PARENT snapshots, and per-table wave ids make re-commits
+  * idempotent (a table already at this waveId skips). The engine resumes
+  * from `min(latest waveId per table)` — exactly the north rule's
   * "killed job resumes mid-wave with identical crawl ordering and
   * URL-seen membership".
   *
@@ -120,10 +124,27 @@ final class CrawlEngine(val spark: SparkSession, val root: String,
     htmlT.commitReplace(htmlT.read(htmlSchema).limit(0), 0L)
   }
 
-  /** The wave every table has fully committed. */
-  def lastCompleteWave: Long =
+  /** The latest committed wave of each table. The carry table counts
+    * when [[SchedulerConfig.carryBudgetDebt]] is on; it has no wave-0
+    * snapshot (an absent table is zero debt), so it starts at wave 0.
+    */
+  private def tableWaves: Seq[Long] = {
+    val budget =
+      if (cfg.carryBudgetDebt)
+        Seq(budgetT.latest.map(_.waveId).getOrElse(0L))
+      else Nil
     Seq(frontierT, seenT, articlesT, htmlT)
-      .map(_.latest.map(_.waveId).getOrElse(-1L)).min
+      .map(_.latest.map(_.waveId).getOrElse(-1L)) ++ budget
+  }
+
+  /** The wave every table has fully committed. */
+  def lastCompleteWave: Long = tableWaves.min
+
+  /** Whether a crash left the next wave committed in some tables only. */
+  def waveInterrupted: Boolean = {
+    val waves = tableWaves
+    waves.max > waves.min
+  }
 
   /** Article extraction pipeline (pure column expressions + the
     * per-source cascade Catalyst expression; no UDFs) — the FULL §1.1
@@ -137,10 +158,12 @@ final class CrawlEngine(val spark: SparkSession, val root: String,
     *  - P18 keyword-meta merge, P21 authors, P20 industries;
     *  - category: never set by any reference plugin (news_event.py:226
     *    has no plugin caller) — carried as null for record parity.
-    * All dispatch is per-row on the source column, resolved at plan time
-    * into CASE expressions — the reference's per-plugin virtual calls.
+    * All dispatch is per-row on the source column — the reference's
+    * per-plugin virtual calls — through [[graft.extract.SourceProfiles
+    * .bySource]], which Catalyst's interpreted walker evaluates; the
+    * code generated around it stays small (`ExtractionCodegenSpec`).
     */
-  private def extractArticles(fetched: DataFrame, waveId: Long): DataFrame = {
+  private[graft] def extractArticles(fetched: DataFrame, waveId: Long): DataFrame = {
     import graft.extract.SourceProfiles
     val html = col("_html")
     val body = graft.extract.SourceCascades
@@ -175,23 +198,21 @@ final class CrawlEngine(val spark: SparkSession, val root: String,
       // the article text), and binding avoids re-evaluating the clean
       // chain per consumer
       .withColumn("_text",
-        TextClean.cleanText(SourceProfiles.bySource(col("source"))(p =>
-          SourceProfiles.checkAndClean(p, col("_body")))))
+        TextClean.cleanText(
+          SourceProfiles.bySource(col("source"))(p =>
+            SourceProfiles.checkAndClean(p, col("_body")))))
       .select(
         col("url"),
         SourceProfiles.bySource(col("source"))(p =>
           SourceProfiles.uniqueId(p, col("url"), html)).as("uniqueId"),
         col("source").as("module"),
-        // per-source date EXTRAS dispatch + ONE shared base cascade:
-        // coalesce(cascade(extras), cascade(base)) ≡ cascade(extras++base)
-        // per profile, without duplicating the 15-pattern base stack
-        // into every dispatch branch
-        coalesce(
-          SourceProfiles.bySource(col("source"))(p =>
-            graft.functions.DateExtract
-              .cascade(html, current_date(), p.dateExtras)),
-          graft.functions.DateExtract.publishedDate(html, current_date()))
-          .as("pubdate"),
+        // per-source date cascade: the plugin's extras, then the 15 base
+        // patterns, each branch whole inside the interpreted dispatch —
+        // the base cascade compiled outside it, as one shared coalesce
+        // arm, is itself a 255 KB projection class
+        SourceProfiles.bySource(col("source"))(p =>
+          graft.functions.DateExtract
+            .publishedDate(html, current_date(), p.dateExtras)).as("pubdate"),
         // per-source title dispatch (only ndtv overrides:
         // h1[itemprop=headline], mod_en_in_ndtv.py:286-299), generic
         // <title> tag for everything else / when the override is empty
@@ -309,11 +330,16 @@ final class CrawlEngine(val spark: SparkSession, val root: String,
     val waveId = lastCompleteWave + 1
     val frontier = frontierT.readAtWave(frontierSchema, waveId - 1)
     val seen = seenT.readAtWave(seenSchema, waveId - 1)
-    // Incremental seen-filter: read the shards persisted by the PARENT
-    // wave (never rebuilt from the full seen set — O(bloom bits) + this
-    // wave's delta only). A missing/stale filter is still correct: the
-    // bloom prunes, the exact anti-join in Scheduler.schedule decides.
-    val blooms = bloomStore.readAtWave(waveId - 1)
+    // Incremental seen-filter: the shards persisted by the PARENT wave
+    // (O(bloom bits) + this wave's delta, never a full rebuild). Only a
+    // filter at exactly waveId - 1 covers the parent seen set; when a
+    // crash left it missing (the seen commit and the bloom write are
+    // separate), it is rebuilt once from the parent seen snapshot — the
+    // rebuilt filter is bit-identical, since a bloom is the OR of its
+    // urls' bits.
+    val blooms = bloomStore.readAtWave(waveId - 1).getOrElse(
+      SeenSet.buildShardedBloom(seen, "url", cfg.bloomShards,
+        cfg.bloomExpectedTotal, cfg.bloomFpp))
 
     val sc = spark.sparkContext
     def phase[T](name: String)(f: => T): T = {
@@ -327,7 +353,7 @@ final class CrawlEngine(val spark: SparkSession, val root: String,
     val carry = if (cfg.carryBudgetDebt)
       Some(budgetT.readAtWave(budgetSchema, waveId - 1)) else None
     val scheduled = Scheduler
-      .schedule(frontier, seen, robots, waveId, cfg, blooms, carry)
+      .schedule(frontier, seen, robots, waveId, cfg, Some(blooms), carry)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val fetchJoin = scheduled.join(
         pages.select(col("url"), col("html")), Seq("url"), "left")
@@ -353,22 +379,17 @@ final class CrawlEngine(val spark: SparkSession, val root: String,
     val newLinks = discoverLinks(fetched, waveId, seen, frontier)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // ONE aggregation action yields wave totals AND the north rule's
-    // per-partition fetch counters (driver-side constants are the
-    // Amdahl term of a wave — keep them to two jobs: this + newLinks)
+    // ONE aggregation action yields the wave totals AND the north rule's
+    // per-partition fetch counters, and materializes the schedule and
+    // the fetch join every later phase reads
     val cells = phase("counters")(fetchJoin
       .groupBy(col("hostHash"), col("html").isNotNull.as("ok")).count()
       .collect()).map(r => (r.getInt(0), r.getBoolean(1), r.getLong(2)))
-    val stats = WaveStats(waveId,
-      scheduled = cells.map(_._3).sum,
-      fetched = cells.filter(_._2).map(_._3).sum,
-      failed = cells.filterNot(_._2).map(_._3).sum,
-      newLinks = phase("discover-links")(newLinks.count()))
+    val scheduledN = cells.map(_._3).sum
+    val fetchedN = cells.filter(_._2).map(_._3).sum
+    val failedN = scheduledN - fetchedN
     val perPartition = cells.groupBy(_._1).view
       .map { case (p, cs) => s"part_$p" -> cs.map(_._3).sum }.toMap
-    val counters = Map(
-      "scheduled" -> stats.scheduled, "fetched" -> stats.fetched,
-      "failed" -> stats.failed, "newLinks" -> stats.newLinks) ++ perPartition
 
     // right-size small outputs: a wave's delta tables are often tiny
     // relative to cfg.numPartitions — writing 32 near-empty files and
@@ -383,38 +404,68 @@ final class CrawlEngine(val spark: SparkSession, val root: String,
         ((rows + rowsPerSlot - 1) / rowsPerSlot).toInt))
     }
 
-    // idempotent per-table commits (skip tables already at this wave)
-    if (seenT.latest.forall(_.waveId < waveId))
-      phase("commit-seen")(
-        seenT.commitAppend(newSeen.repartition(slots(stats.scheduled)),
-          waveId, counters))
-    // Seen-filter delta: bloom over THIS WAVE's new urls only, OR-ed into
-    // the parent filter (fixed capacity keeps shards bit-compatible).
-    val deltaBloom = phase("bloom-delta")(SeenSet.buildShardedBloom(
-      newSeen.select("url").repartition(slots(stats.scheduled)), "url",
-      cfg.bloomShards, cfg.bloomExpectedTotal, cfg.bloomFpp))
-    bloomStore.write(waveId,
-      blooms.fold(deltaBloom)(SeenSet.mergeSharded(_, deltaBloom)))
-    // Html sidecar first, then the base record: the payload is written
-    // exactly once per wave here and never again (enrichment/dedupe
-    // rewrites touch only the base table). The sidecar commits straight
-    // from the CACHED fetch join — every completed fetch's raw payload,
-    // like a crawl's WARC archive — NOT from `articles`: the F7/F8
-    // length gates inside `articles` depend on the extraction cascade,
-    // so projecting (url, html) out of it would still re-run the
-    // wave's heaviest CPU (the per-source regex cascades) a second
-    // time just to decide which payloads to keep. Payload rows for
-    // pages the gates later drop are tolerated orphans, exactly like
-    // tombstoned articles' payloads (articlesNow joins from the
+    // The phases below read only the parent snapshots and this wave's
+    // cached frames, so they run as concurrent Spark jobs, each on its
+    // own thread: one driver thread issuing ~25 small jobs in a row leaves
+    // the cores idle between them. A thread created here inherits this
+    // thread's Spark local properties (the caller's job group); each
+    // sets its own job description. Per-table commits are idempotent
+    // (tables already at this wave skip), so a crash may leave any subset
+    // committed and a rerun completes the rest.
+    def async[T](f: => T): Future[T] = {
+      val p = Promise[T]()
+      val t = new Thread(() =>
+        p.complete(try Success(f) catch { case e: Throwable => Failure(e) }))
+      t.setDaemon(true)
+      t.start()
+      p.future
+    }
+    // the new-link count goes into every manifest's counters; manifests
+    // are written after their data, so the count overlaps the writes
+    // (awaiting it before each write cost ~7% of crawl-long throughput
+    // on a 4-core host)
+    val newLinksN = async(phase("discover-links")(newLinks.count()))
+    def counters = Map(
+      "scheduled" -> scheduledN, "fetched" -> fetchedN,
+      "failed" -> failedN,
+      "newLinks" -> Await.result(newLinksN, Duration.Inf)) ++ perPartition
+
+    val commitSeen = async {
+      if (seenT.latest.forall(_.waveId < waveId))
+        phase("commit-seen")(
+          seenT.commitAppend(newSeen.repartition(slots(scheduledN)),
+            waveId, counters))
+      // Seen-filter delta: bloom over THIS WAVE's new urls only, OR-ed
+      // into the parent filter (fixed capacity keeps shards
+      // bit-compatible).
+      val deltaBloom = phase("bloom-delta")(SeenSet.buildShardedBloom(
+        newSeen.select("url").repartition(slots(scheduledN)), "url",
+        cfg.bloomShards, cfg.bloomExpectedTotal, cfg.bloomFpp))
+      bloomStore.write(waveId, SeenSet.mergeSharded(blooms, deltaBloom))
+    }
+    // The html sidecar commits straight from the CACHED fetch join —
+    // every completed fetch's raw payload, like a crawl's WARC archive —
+    // NOT from `articles`: the F7/F8 length gates inside `articles`
+    // depend on the extraction cascade, so projecting (url, html) out of
+    // it would run the wave's heaviest CPU (the per-source regex
+    // cascades) a second time just to decide which payloads to keep.
+    // The payload is written exactly once per wave and never again
+    // (enrichment/dedupe rewrites touch only the base table). Payload
+    // rows for pages the gates later drop are tolerated orphans, exactly
+    // like tombstoned articles' payloads (articlesNow joins from the
     // articles side).
-    if (htmlT.latest.forall(_.waveId < waveId))
-      phase("commit-html")(
-        htmlT.commitAppend(fetched.select(col("url"), col("html"))
-          .repartition(slots(stats.fetched)), waveId, counters))
-    if (articlesT.latest.forall(_.waveId < waveId))
-      phase("commit-articles")(
-        articlesT.commitAppend(articles.drop("html")
-          .repartition(slots(stats.fetched)), waveId, counters))
+    val commitHtml = async {
+      if (htmlT.latest.forall(_.waveId < waveId))
+        phase("commit-html")(
+          htmlT.commitAppend(fetched.select(col("url"), col("html"))
+            .repartition(slots(fetchedN)), waveId, counters))
+    }
+    val commitArticles = async {
+      if (articlesT.latest.forall(_.waveId < waveId))
+        phase("commit-articles")(
+          articlesT.commitAppend(articles.drop("html")
+            .repartition(slots(fetchedN)), waveId, counters))
+    }
     // Next-wave politeness carry (flagged): the host set is the
     // STILL-PENDING frontier after this wave (raw frontier anti-joined
     // against prior seen AND this wave's delta — the append-only
@@ -424,39 +475,59 @@ final class CrawlEngine(val spark: SparkSession, val root: String,
     // urls were DISCOVERED this wave start at zero next wave for the
     // same reason. State is O(|hosts with pending urls|), replaced per
     // wave under the same idempotent guard.
-    if (cfg.carryBudgetDebt && budgetT.latest.forall(_.waveId < waveId)) {
-      // prior-seen side goes through the SAME bloom-pruned anti-join
-      // the scheduler uses (most frontier rows miss the bloom and never
-      // shuffle); only this wave's small delta needs a plain anti-join
-      val pendingHosts = SeenSet
-        .removeSeen(frontier.select("url", "host"), "url", seen, "url",
-          blooms)
-        .join(newSeen.select("url"), Seq("url"), "left_anti")
-      phase("commit-budget")(budgetT.commitReplace(
-        Scheduler.nextCarry(pendingHosts, carry.get, scheduled, waveId, cfg)
-          .repartition(slots(stats.scheduled)), waveId, counters))
+    val commitBudget = async {
+      if (cfg.carryBudgetDebt && budgetT.latest.forall(_.waveId < waveId)) {
+        // prior-seen side goes through the SAME bloom-pruned anti-join
+        // the scheduler uses (most frontier rows miss the bloom and never
+        // shuffle); only this wave's small delta needs a plain anti-join
+        val pendingHosts = SeenSet
+          .removeSeen(frontier.select("url", "host"), "url", seen, "url",
+            Some(blooms))
+          .join(newSeen.select("url"), Seq("url"), "left_anti")
+        phase("commit-budget")(budgetT.commitReplace(
+          Scheduler.nextCarry(pendingHosts, carry.get, scheduled, waveId, cfg)
+            .repartition(slots(scheduledN)), waveId, counters))
+      }
     }
-    if (frontierT.latest.forall(_.waveId < waveId)) {
-      // Append-only frontier: each wave writes only its newly discovered
-      // links — O(delta) IO, never the O(|frontier|) rewrite the
-      // reference's pending-table DELETE+INSERT implies. Consumed rows
-      // are masked by the seen anti-join at read; a periodic compaction
-      // bounds the masked fraction.
-      if (cfg.compactFrontierEveryWaves > 0 &&
-          waveId % cfg.compactFrontierEveryWaves == 0) {
-        val pending = frontier.unionByName(newLinks)
-          .join(seenT.read(seenSchema).select("url"), Seq("url"), "left_anti")
-        phase("compact-frontier")(frontierT.commitReplace(
-          pending.repartition(cfg.numPartitions, col("hostHash")),
-          waveId, counters))
-      } else
-        phase("commit-frontier")(frontierT.commitAppend(
-          newLinks.repartition(slots(stats.newLinks), col("hostHash")),
-          waveId, counters))
+    // Append-only frontier: each wave writes only its newly discovered
+    // links — O(delta) IO, never the O(|frontier|) rewrite the
+    // reference's pending-table DELETE+INSERT implies. Consumed rows are
+    // masked by the seen anti-join at read; a periodic compaction bounds
+    // the masked fraction. Compaction masks with the parent seen set plus
+    // this wave's delta, not the seen table's latest snapshot, which
+    // this wave's seen commit may or may not have reached yet. Both read
+    // `newLinks` after its count has cached it.
+    val commitFrontier = async {
+      val nLinks = Await.result(newLinksN, Duration.Inf)
+      if (frontierT.latest.forall(_.waveId < waveId)) {
+        if (cfg.compactFrontierEveryWaves > 0 &&
+            waveId % cfg.compactFrontierEveryWaves == 0) {
+          val pending = frontier.unionByName(newLinks)
+            .join(seen.select("url").unionByName(newSeen.select("url")),
+              Seq("url"), "left_anti")
+          phase("compact-frontier")(frontierT.commitReplace(
+            pending.repartition(cfg.numPartitions, col("hostHash")),
+            waveId, counters))
+        } else
+          phase("commit-frontier")(frontierT.commitAppend(
+            newLinks.repartition(slots(nLinks), col("hostHash")),
+            waveId, counters))
+      }
     }
 
-    scheduled.unpersist(); fetchJoin.unpersist(); newLinks.unpersist()
-    stats
+    val phases = Seq(newLinksN, commitSeen, commitHtml, commitArticles,
+      commitBudget, commitFrontier)
+    try phases.foreach(Await.ready(_, Duration.Inf))
+    finally {
+      scheduled.unpersist(); fetchJoin.unpersist(); newLinks.unpersist()
+    }
+    phases.flatMap(_.value.get.failed.toOption).distinct match {
+      case first +: rest =>
+        rest.foreach(first.addSuppressed); throw first
+      case _ =>
+    }
+    WaveStats(waveId, scheduled = scheduledN, fetched = fetchedN,
+      failed = failedN, newLinks = newLinksN.value.get.get)
   }
 
   def runWaves(n: Int): Seq[WaveStats] = (1 to n).map(_ => runWave())

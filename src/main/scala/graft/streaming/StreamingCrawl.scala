@@ -23,8 +23,17 @@ object StreamingCrawl {
   /** Append one micro-batch of seeds to the frontier (first-seen-deduped
     * against everything known) and run one wave. Public so tests can
     * drive a single batch synchronously.
+    *
+    * A wave a crash left committed in some tables only is finished first,
+    * from the snapshots it was planned on: seeds appended before its rerun
+    * would change its schedule under the commits that already landed, or
+    * sit below a frontier commit that already holds the wave. A batch
+    * Structured Streaming replays after that crash brings no fresh seeds
+    * (its own are in the frontier), and the finished wave is its wave.
     */
   def processBatch(engine: CrawlEngine, seeds: DataFrame): Unit = {
+    val resumed = engine.waveInterrupted
+    if (resumed) engine.runWave()
     val wave = engine.lastCompleteWave
     val frontier = engine.frontierT.read(engine.frontierSchema)
     val seen = engine.seenT.read(engine.seenSchema)
@@ -46,8 +55,8 @@ object StreamingCrawl {
         F.lit(0).as("attempts"), F.lit(0).as("depth"))
       engine.frontierT.commitAppend(rows, wave,
         Map("streamed_seeds" -> rows.count()))
-    }
-    engine.runWave()
+      engine.runWave()
+    } else if (!resumed) engine.runWave()
   }
 
   /** Launch the streaming crawl over a file-source directory of seed

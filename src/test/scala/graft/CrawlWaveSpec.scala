@@ -97,25 +97,83 @@ class CrawlWaveSpec extends SparkTestBase {
     assert(stateFingerprint(a) == stateFingerprint(b))
   }
 
-  test("resume after simulated crash reproduces the uninterrupted run") {
-    val a = newEngine()
-    a.runWaves(3)
-
-    val b = newEngine()
-    b.runWaves(2)
-    // simulate a crash after wave 3 committed seen but not frontier or
-    // articles: run wave 3 fully, then delete the frontier+articles
-    // commits of wave 3 (leaving orphan data dirs behind)
-    b.runWave()
-    // delete last commit json of frontier and articles tables
-    Seq("frontier", "articles").foreach { t =>
-      val commits = Files.list(Paths.get(s"${b.root}/$t/_commits"))
+  /** The state a crash leaves when the last wave's commits of `tables`
+    * never happened: their latest commit manifests are deleted, their
+    * data dirs stay behind as orphans. The wave's commits run
+    * concurrently, so any subset of tables can be missing.
+    */
+  private def dropLastCommit(e: CrawlEngine, tables: String*): Unit =
+    tables.foreach { t =>
+      val commits = Files.list(Paths.get(s"${e.root}/$t/_commits"))
         .iterator().asScala.toSeq.sortBy(_.getFileName.toString)
       Files.delete(commits.last)
     }
-    assert(b.lastCompleteWave == 2L)
-    b.runWave() // repair wave 3
-    assert(b.lastCompleteWave == 3L)
+
+  /** The stored frontier rows, consumed ones included (what a compaction
+    * wrote), unlike [[stateFingerprint]]'s seen-masked pending set.
+    */
+  private def storedFrontier(e: CrawlEngine): Seq[(String, Long)] = {
+    import spark.implicits._
+    e.frontierT.read(e.frontierSchema).select("url", "seq")
+      .as[(String, Long)].collect().sorted.toSeq
+  }
+
+  test("resume after simulated crash reproduces the uninterrupted run") {
+    // a wave's commits run concurrently, so a crash in wave 3 can leave
+    // any subset of its tables committed
+    val compacting = cfg(4, 4).copy(compactFrontierEveryWaves = 3)
+    // the carried-debt test's setup, where the carry changes every budget
+    val debt = cfg(4, 4).copy(waveSeconds = 10, politenessFixedSecs = 7,
+      politenessRandMinSecs = 0, politenessRandMaxSecs = 0,
+      carryBudgetDebt = true)
+    val cases = Seq(
+      ("seen committed, frontier and articles not", cfg(4, 4),
+        Seq("frontier", "articles")),
+      ("articles and frontier committed, seen not", cfg(4, 4), Seq("seen")),
+      ("compaction wave without its seen commit", compacting, Seq("seen")),
+      // the rerun compacts while the seen table still lacks wave 3
+      ("compaction wave without its seen and frontier commits", compacting,
+        Seq("seen", "frontier")),
+      ("carried debt without the wave's budget commit", debt,
+        Seq("host_budget")))
+    cases.foreach { case (name, c, lost) => withClue(s"$name: ") {
+      val (hosts, hot) = if (c.carryBudgetDebt) (2, 1) else (50, 3)
+      val pages = SyntheticPages.pages(spark, N, hosts, hot)
+      def engine(): CrawlEngine = {
+        val e = new CrawlEngine(spark, tempDir("crawl-resume"), pages,
+          emptyRobots, c)
+        e.init(SyntheticPages.seeds(spark, 40, hosts, hot))
+        e
+      }
+      def stats(e: CrawlEngine, n: Int) = e.runWaves(n)
+        .map(w => (w.waveId, w.scheduled, w.fetched, w.failed, w.newLinks))
+      val a = engine()
+      val want = stats(a, 4)
+      val b = engine()
+      b.runWaves(3)
+      dropLastCommit(b, lost: _*)
+      assert(b.lastCompleteWave == 2L)
+      assert(stats(b, 2) == want.drop(2)) // repair wave 3, then run wave 4
+      assert(stateFingerprint(a) == stateFingerprint(b))
+      assert(storedFrontier(a) == storedFrontier(b))
+      def carried(e: CrawlEngine) = e.budgetT.read(e.budgetSchema)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).sorted.toSeq
+      assert(carried(a) == carried(b))
+    } }
+  }
+
+  test("a seen-filter that lags the seen table is rebuilt, so no url is " +
+      "fetched twice") {
+    val a = newEngine()
+    a.runWaves(4)
+    val b = newEngine()
+    b.runWaves(2)
+    // a crash between wave 2's seen commit and its bloom write
+    Files.delete(Paths.get(s"${b.root}/seen_bloom/000000000002.bloom"))
+    b.runWaves(2)
+    val seen = b.seenUrls()
+    assert(seen.count() == seen.select("url").distinct().count(),
+      "a url was fetched twice")
     assert(stateFingerprint(a) == stateFingerprint(b))
   }
 

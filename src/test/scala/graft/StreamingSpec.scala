@@ -127,6 +127,55 @@ class StreamingSpec extends SparkTestBase {
     assert(kept.toSeq == Seq(("lower", 10L)))
   }
 
+  test("a batch after a crash mid-wave finishes that wave first and " +
+      "reproduces the uninterrupted run") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import graft.core.SchedulerConfig
+    import graft.sources.SyntheticPages
+    import graft.streaming.{CrawlEngine, StreamingCrawl}
+    val pages = SyntheticPages.pages(spark, 3000L)
+    val robots = Seq.empty[(String, Seq[String])].toDF("host", "disallowPrefixes")
+    val cfg = SchedulerConfig(topKPerHost = 5, waveSeconds = 40,
+      numPartitions = 4, saltBuckets = 4, bloomShards = 4)
+    val seeds = SyntheticPages.seeds(spark, 40)
+    val (first, second) =
+      (seeds.filter(col("seq") < 20), seeds.filter(col("seq") >= 20))
+    def engine(): CrawlEngine = {
+      val e = new CrawlEngine(spark, tempDir("stream-resume"), pages,
+        robots, cfg)
+      e.init(seeds.limit(0))
+      e
+    }
+    def state(e: CrawlEngine) = (e.lastCompleteWave,
+      e.seenUrls().select("url", "status").as[(String, String)]
+        .collect().sorted.toSeq,
+      e.frontierNow().select("url", "seq").as[(String, Long)]
+        .collect().sorted.toSeq,
+      e.articlesBaseNow().select("url", "text").as[(String, String)]
+        .collect().sorted.toSeq)
+    val want = {
+      val e = engine()
+      Seq(first, second).foreach(StreamingCrawl.processBatch(e, _))
+      state(e)
+    }
+    // wave 1's frontier and articles commits landed, its seen commit did
+    // not; then the next batch arrives, or the crashed batch is replayed
+    Seq("next batch" -> Seq(second),
+        "replayed batch" -> Seq(first, second)).foreach {
+      case (name, batches) => withClue(s"$name: ") {
+        val e = engine()
+        StreamingCrawl.processBatch(e, first)
+        val seenCommits = Files.list(Paths.get(s"${e.root}/seen/_commits"))
+          .iterator().asScala.toSeq.sortBy(_.getFileName.toString)
+        Files.delete(seenCommits.last)
+        assert(e.waveInterrupted && e.lastCompleteWave == 0L)
+        batches.foreach(StreamingCrawl.processBatch(e, _))
+        assert(state(e) == want)
+      }
+    }
+  }
+
   test("watermarked append-mode windowed agg finalizes windows on " +
       "watermark advance and drops too-late rows (§2.9)") {
     val stage = tempDir("wm-events")
